@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — one JSON line per run, consumed by the driver as
   * BENCH_r{N}.json.
   *
@@ -192,22 +190,7 @@ object Bench {
     }
     require(prefixes.distinct.size == queries.size,
       s"duplicate bench key prefixes: ${prefixes.diff(prefixes.distinct).distinct.mkString(",")}")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // shuffle/spill scratch on the fastest writable tier (see the
-      // Scratch placement scaladoc — measured 31× file-create gap on
-      // this host; parameterised via SPARK_GRAFT_SCRATCH_DIR)
-      .config("spark.local.dir", Scratch.sparkLocalDir)
-      // serialized sort writer for every exchange (the 100 TB writer;
-      // see SparkTuning — bypass's per-reduce file concat mmap-thrashed
-      // 32-core runs)
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        SparkTuning.bypassMergeThreshold)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.build(s"local[$cpus]", cpus.toInt)
     def load1: Double =
       java.lang.management.ManagementFactory.getOperatingSystemMXBean
         .getSystemLoadAverage

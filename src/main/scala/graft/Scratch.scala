@@ -2,41 +2,19 @@ package graft
 
 /** Scratch directories for queries that materialize artifacts
   * (persisted indexes, streaming sources/checkpoints, register
-  * artifacts): everything is created under ONE per-JVM root that a
-  * shutdown hook deletes recursively, so repeated bench captures,
-  * suite runs and Verify passes stop accumulating dead copies of the
-  * corpus in the system temp dir. Deletion is best-effort — a failure
-  * at exit must never mask the run's real outcome.
+  * artifacts) and for `spark.local.dir`: everything lives under ONE
+  * per-JVM root that a shutdown hook deletes recursively, so repeated
+  * runs never accumulate dead copies of the corpus. Deletion is
+  * best-effort — a failure at exit must never mask the run's outcome.
   *
-  * PLACEMENT (r16 optimization round, guide §1 measure-first + §6):
-  * the all-thread stack sampler read the heavy iterative queries
-  * spending whole seconds in `FileOutputStream.open0` /
-  * `IndexShuffleBlockResolver.writeMetadataFileAndCommit` — shuffle
-  * and artifact FILE CREATION, not compute. This host's system temp
-  * dir is ext4 (measured 0.28 ms/create vs 0.009 ms on the RAM-backed
-  * `/dev/shm` tmpfs, 31×, worse under 32 concurrent creators). Scratch
-  * therefore roots itself on the fastest writable scratch tier:
-  * `$SPARK_GRAFT_SCRATCH_DIR` when set (`off` forces the system temp
-  * dir), else `/dev/shm` when writable, else the system temp dir —
-  * the same decision a production deployment makes when it points
-  * `spark.local.dir` at its NVMe array instead of the OS disk. The
-  * shutdown-hook cleanup bounds tmpfs growth (and [[sparkLocalDir]]
-  * lives under the same self-cleaning root, so block-manager dirs
-  * from a killed run can't leak RAM across runs). Placement changes
-  * WHERE bytes land, never what any query computes.
-  *
-  * SCALE SAFETY (r17, VERDICT r16 #2): tmpfs is only the right tier
-  * when the host has RAM to spare — shuffle SPILL exists precisely
-  * because memory ran out, so a RAM-backed spill tier on a
-  * memory-tight executor is self-defeating (it evicts page cache and
-  * courts the OOM killer). The unconditional r16 default is therefore
-  * gated on measured headroom: /dev/shm is picked only when
-  * MemAvailable ≥ [[TmpfsHeadroomFactor]] × the JVM max heap
-  * ([[tmpfsHeadroomOk]]) — this 128 GiB sandbox with an 8 GiB heap
-  * passes easily, a production executor whose heap is sized to most
-  * of its container does not and lands on disk. The env override
-  * stays the explicit switch either way (`SPARK_GRAFT_SCRATCH_DIR` =
-  * path | `off`). */
+  * Placement: `$SPARK_GRAFT_SCRATCH_DIR` when set (`off` forces the
+  * system temp dir), else `/dev/shm` when writable AND the host has
+  * headroom ([[tmpfsHeadroomOk]]), else the system temp dir. tmpfs
+  * makes shuffle and artifact file creation far cheaper than a disk
+  * temp dir (measured in OPTIMIZATION_r17.md), but spill exists because
+  * memory ran out, so a RAM-backed tier is only used when the host has
+  * RAM to spare. Placement changes WHERE bytes land, never what any
+  * query computes. */
 object Scratch {
 
   /** tmpfs is chosen only when available RAM ≥ this × max heap: the
@@ -83,25 +61,14 @@ object Scratch {
     r
   }
 
-  /** Per-JVM `spark.local.dir` under the self-cleaning root — session
-    * builders pass this so shuffle/spill scratch rides the same fast
-    * tier (see the placement note above). Resolved lazily at first
-    * session build; stable for the JVM's lifetime. */
+  /** Per-JVM `spark.local.dir` under the self-cleaning root, so a
+    * killed run's block-manager dirs cannot outlive the root. Resolved
+    * at the first session build; stable for the JVM's lifetime. */
   lazy val sparkLocalDir: String = dir("spark_local_")
 
   /** A fresh directory under the self-cleaning root. */
   def dir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(root, prefix).toString
-
-  /** Release one scratch directory NOW (probes that loop over
-    * per-stage scratch artifacts — e.g. the drift probe's per-batch
-    * rebuild indexes — release each as soon as it is read, instead
-    * of accumulating until the exit sweep). Best-effort, and only
-    * paths under the self-cleaning root are touched. */
-  def drop(path: String): Unit = {
-    val p = java.nio.file.Paths.get(path)
-    if (p.normalize.startsWith(root.normalize)) delete(p)
-  }
 
   private def delete(p: java.nio.file.Path): Unit =
     try {

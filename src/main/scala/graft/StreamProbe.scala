@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only probe: per-micro-batch duration breakdown for the streaming
   * replay queries (the r16 optimization round's biggest cost family,
   * 65.4 s of the 237.3 s r16 capture). Runs a query once, then prints
@@ -24,20 +22,8 @@ object StreamProbe {
       .map(a => a(0) -> a(1))
     val names = if (nameArgs.nonEmpty) nameArgs.toSeq
       else Seq("q233_stream_join_late_oracled")
-    val spark = SparkSession.builder()
-      .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", Scratch.sparkLocalDir)
-      // serialized sort writer for every exchange (the 100 TB writer;
-      // see SparkTuning — bypass's per-reduce file concat mmap-thrashed
-      // 32-core runs)
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        SparkTuning.bypassMergeThreshold)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = Sessions.build(s"local[$cpus]", cpus.toInt)
     confs.foreach { case (k, v) =>
       spark.conf.set(k, v); println(s"[probe-conf] $k=$v") }
     spark.range(1000000).selectExpr("sum(id)").collect() // warm-up

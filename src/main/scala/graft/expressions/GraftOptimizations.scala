@@ -173,10 +173,11 @@ object AsOfJoinPushdown extends Rule[LogicalPlan] with PredicateHelper {
 }
 
 /** SparkSessionExtensions entry point — registers the graft optimizer
-  * rules and planner strategies:
-  *
-  *   SparkSession.builder().withExtensions(new GraftExtensions)…
-  *   // or: spark.sql.extensions=graft.expressions.GraftExtensions
+  * rules and planner strategies on a foreign session, via the builder's
+  * `withExtensions(new GraftExtensions)` or
+  * `spark.sql.extensions=graft.expressions.GraftExtensions`. Sessions
+  * from [[graft.Sessions]] do not install it: graft queries register
+  * what they need through `GraftExprBridge.ensure*`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

@@ -25,8 +25,12 @@ object KStore {
       col("macroId"), col("microId"), col("k"), col("silhouette"),
       lit(date).as("date"))
 
+  /** Upsert: replaces only the task-key partitions present in
+    * `records` (dynamic partition overwrite, scoped to this writer), so
+    * other task keys already in the store survive. */
   def write(records: DataFrame, path: String): Unit =
     records.write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy("algorithm", "macro", "micro", "firstColumn",
         "secondColumn")
       .json(path)
@@ -44,9 +48,16 @@ object KStore {
         KEntry(r.getAs[Long]("k").toInt, r.getAs[Double]("silhouette")))
       .toMap
 
+  /** The record schema, given to the reader so a read is one scan of
+    * its own task key's partition (pruned by `readDf`'s filter) instead
+    * of a schema-inference pass over every key in the store. */
+  private val Schema = "macroId STRING, microId STRING, k BIGINT, " +
+    "silhouette DOUBLE, date STRING, algorithm STRING, macro STRING, " +
+    "micro STRING, firstColumn STRING, secondColumn STRING"
+
   def readDf(spark: SparkSession, path: String,
       conf: EngineConf): DataFrame =
-    spark.read.json(path)
+    spark.read.schema(Schema).json(path)
       .filter(col("algorithm") === conf.algorithm &&
         col("macro") === conf.macroCol && col("micro") === conf.microCol &&
         col("firstColumn") === conf.xCol && col("secondColumn") === conf.yCol)

@@ -102,21 +102,20 @@ object NnDescent {
       .select(col("id").as("node_id"), col("v"))
   }
 
-  /** ENTRY-FRAME REFRESH for the append path (VERDICT r15 #2) —
+  /** ENTRY-FRAME REFRESH for the append path —
     * re-derives the rank-spaced entry frame from the GROWN corpus
     * under the build's own rule ([[entryCandidates]]: entryCand rows
     * at projection ranks ⌊q·n/entryCand⌋). [[appendToGraph]] refreshes
     * ADJACENCY but never the entry frame, and the measured replication
-    * sweep (DedupScaleProbe --annserve, BASELINE.md r15) showed what
+    * sweep (BASELINE.md, graph-ANN serve replication sweep) showed what
     * that costs: a fixed 32-entry frame's serve recall decays
     * 0.540 → 0.175 as disjoint regions grow the corpus 10×, because
     * entry COVERAGE thins — the graph and the walk are fine. This is
     * the operator the "schedule refreshes by entry-frame staleness"
     * guidance schedules: one O(N log N) rank pass over the grown
-    * corpus (no edge work at all), vs the O(N·cap²·rounds) rebuild.
-    * AnnDriftProbe's append+refresh column measures the effect per
-    * append stage next to the append-with-stale-entries and
-    * full-rebuild lines. Pass the grown corpus (base ∪ every appended
+    * corpus (no edge work at all), vs the O(N·cap²·rounds) rebuild
+    * (BASELINE.md, round-16 append-path drift row, append+refresh
+    * column). Pass the grown corpus (base ∪ every appended
     * batch); size `entryCand` with the corpus' region/cluster count
     * (the sweep's 32·m rule held recall exactly flat). */
   def refreshEntries(vecs: DataFrame, entryCand: Int = 32): DataFrame =
@@ -155,15 +154,15 @@ object NnDescent {
     // rounds) AND lineage-truncated — round r's plan references round
     // r-1's tree TWICE (undirect + keep-k union), so an untruncated
     // chain grows ~2^rounds and OOMs in plan stringification from
-    // rounds ≥ 5 (hit by AnnBuildKnobProbe's geometry sweep, r16;
-    // persist alone cannot fix it — the q240/AnnDriftProbe lesson).
+    // rounds ≥ 5 (BASELINE.md, knnGraph lineage truncation row);
+    // persist alone cannot fix it.
     // DEAD round states (N·k rows each) are released explicitly as
     // soon as the next round materializes — checkpoint blocks are the
     // data's ONLY copy (not LRU-evictable like a persist), so leaving
     // rounds+1 of them per build to the periodic context-cleaner
-    // sweep would accumulate storage across multi-build runs (the
-    // knob probe runs 12 builds per dataset). Only the FINAL round's
-    // blocks stay: they back the returned output's recompute path.
+    // sweep would accumulate storage across multi-build runs. Only
+    // the FINAL round's blocks stay: they back the returned output's
+    // recompute path.
     var edges = ranked
       .select(col("id").as("u"), col("v").as("uv"), col("rn"),
         explode(expr(s"sequence(1, $k)")).as("o"))
@@ -277,7 +276,7 @@ object NnDescent {
     * keyed merge into the affected old lists — independent of corpus
     * size.
     *
-    * MEASURED drift (AnnDriftProbe, BASELINE.md r15): through 5
+    * MEASURED drift (BASELINE.md, round-15 append-path drift row): through 5
     * append batches of 5% each (25% total growth), base-probe
     * recall@8 against the GROWN corpus never drops below the
     * same-geometry full rebuild — search-insert places each new node
@@ -740,11 +739,8 @@ object NnDescent {
     * and whose memory stays executor-side (the driver path's visited
     * set is probes-linear). Outputs are bit-identical by the parity
     * spec, so the switch is invisible to every hash gate. The
-    * threshold default sits at the MEASURED crossover (VERDICT r15
-    * #6; the r15 sweep stopped at 2000 probes with the driver still
-    * ahead, so the old 1024 default encoded a crossover nobody had
-    * observed — the r16 `AnnServeSweep --crossover` run extended the
-    * axis and found it): on local[32] at sf0.1 the driver walk keeps
+    * threshold default sits at the MEASURED crossover (BASELINE.md,
+    * beamServe crossover row): on local[32] at sf0.1 the driver walk keeps
     * a shrinking edge through 2000 probes (1.20 vs 1.30 ms/probe),
     * the bulk engine wins from 6000 (0.68 vs 0.88) and widens at
     * 20000 (0.38 vs 0.88 — the driver's per-hop collect volume and

@@ -1439,8 +1439,8 @@ object VectorQueries {
     * beam q232's trace shows). Runs the fully RELATIONAL engine so
     * the r15 serving ladder's scan-tier path sits behind the oracle
     * gate directly; the driver walk and the RAM-resident hot engine
-    * are proved bit-identical to it (NnDescentSpec parity + the
-    * AnnServeSweep per-batch checks), so this one hash gates all
+    * are proved bit-identical to it (NnDescentSpec parity; per-batch
+    * parity in BASELINE.md's ANN serve sweep row), so this one hash gates all
     * three. Five reversed-stored-vector probes (the q232 convention),
     * hops=8, beam=4, k=8; the oracle re-derives the graph, the entry
     * frame, all eight visited-set hops, and the self-excluded top-8

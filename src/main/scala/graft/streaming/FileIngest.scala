@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * optional file-granularity micro-batches, AvailableNow draining, and
   * the empty-batch guard. Keeping it in one place means a fix to the
   * source setup or trigger policy applies to every ingest loop. */
-private[streaming] object FileIngest {
+private[graft] object FileIngest {
 
   /** Start a foreachBatch query over the parquet files in `srcDir`;
     * `body` runs once per non-empty micro-batch. */
@@ -33,6 +33,11 @@ private[streaming] object FileIngest {
   /** Drain the backlog and stop — the replay/backfill harness. */
   def drain(q: StreamingQuery): Unit =
     try q.awaitTermination() finally if (q.isActive) q.stop()
+
+  /** The replay runners' default `shufflePartitions`. It must stay ≤
+    * [[graft.Sessions.bypassMergeThreshold]] so their micro-batch
+    * shuffles keep the bypass writer (`StreamWidthSpec`). */
+  val DefaultWidth: Option[Int] = Some(2)
 
   /** Scoped stateful/batch-body shuffle-partition override — the
     * [[EventStream]] runner contract applied to the foreachBatch

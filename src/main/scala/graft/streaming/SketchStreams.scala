@@ -30,7 +30,7 @@ object SketchStreams {
       bloomDir: String, checkpointDir: String, keyCol: String,
       mBits: Int = 4096, k: Int = 3,
       oneFilePerBatch: Boolean = true,
-      shufflePartitions: Option[Int] = Some(2)): Unit =
+      shufflePartitions: Option[Int] = FileIngest.DefaultWidth): Unit =
     FileIngest.withPartitions(spark, shufflePartitions) {
       FileIngest.drain(
         FileIngest.stream(spark, srcDir, checkpointDir, oneFilePerBatch) {
@@ -45,7 +45,7 @@ object SketchStreams {
   def runCmsToCompletion(spark: SparkSession, srcDir: String,
       cmsDir: String, checkpointDir: String, keyCol: String,
       d: Int = 4, w: Int = 512, oneFilePerBatch: Boolean = true,
-      shufflePartitions: Option[Int] = Some(2)): Unit =
+      shufflePartitions: Option[Int] = FileIngest.DefaultWidth): Unit =
     FileIngest.withPartitions(spark, shufflePartitions) {
       FileIngest.drain(
         FileIngest.stream(spark, srcDir, checkpointDir, oneFilePerBatch) {
@@ -61,7 +61,7 @@ object SketchStreams {
   def runHistToCompletion(spark: SparkSession, srcDir: String,
       histDir: String, checkpointDir: String, valueCol: String,
       width: Long, nbins: Int, oneFilePerBatch: Boolean = true,
-      shufflePartitions: Option[Int] = Some(2)): Unit =
+      shufflePartitions: Option[Int] = FileIngest.DefaultWidth): Unit =
     FileIngest.withPartitions(spark, shufflePartitions) {
       FileIngest.drain(
         FileIngest.stream(spark, srcDir, checkpointDir, oneFilePerBatch) {

@@ -122,8 +122,19 @@ class IoSpec extends GraftSuite {
     assert(loaded.values.forall(e => e.k === 3 &&
       e.silhouette >= -1.0 && e.silhouette <= 1.0))
     // wrong task key reads nothing
-    val other = KStore.read(spark, path, conf.copy(algorithm = "BisectingKMeans"))
+    val bisect = conf.copy(algorithm = "BisectingKMeans")
+    val other = KStore.read(spark, path, bisect)
     assert(other.isEmpty)
+    // a second task key upserts beside the first, and rewriting a key
+    // replaces its own partition without duplicating or dropping others
+    val bisectRecords = KStore.fromResults(results, conf, "2026-08-13")
+      .withColumn("algorithm", lit(bisect.algorithm))
+    KStore.write(bisectRecords, path)
+    KStore.write(KStore.fromResults(results, conf, "2026-08-14"), path)
+    assert(KStore.readDf(spark, path, conf).count() === 6)
+    assert(KStore.read(spark, path, bisect) === loaded)
+    assert(KStore.readDf(spark, path, conf).select("date").distinct()
+      .collect().map(_.get(0).toString).toSeq === Seq("2026-08-14"))
   }
 
   test("M11 re-cluster path: degraded cached silhouette triggers k re-search") {
